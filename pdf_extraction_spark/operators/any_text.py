@@ -84,6 +84,18 @@ def decode_bom_text(raw: bytes) -> str | None:
     return None
 
 
+def _plausible_ftyp(raw: bytes) -> bool:
+    """ISO-BMFF leads with an ftyp box: a big-endian size that fits the
+    blob, 'ftyp', then a four-character major brand.  Text that merely
+    spells 'ftyp' at bytes 4-8 fails the size (its first four bytes
+    read as hundreds of MB) or the brand."""
+    size = int.from_bytes(raw[:4], "big")
+    brand = raw[8:12]
+    return 8 <= size <= len(raw) and len(brand) == 4 and all(
+        0x20 <= c <= 0x7E for c in brand
+    )
+
+
 def sniff_doc_type(raw: bytes) -> str:
     """Content type from leading bytes; zip containers are refined to
     docx/epub by their package layout."""
@@ -115,7 +127,7 @@ def sniff_doc_type(raw: bytes) -> str:
             return t
     if raw[:4] == b"RIFF":
         return "wav" if raw[8:12] == b"WAVE" else "riff"
-    if raw[4:8] == b"ftyp":  # ISO-BMFF: box size then 'ftyp'
+    if raw[4:8] == b"ftyp" and _plausible_ftyp(raw):
         return "mp4"
     if len(raw) >= 2 and raw[0] == 0xFF and (raw[1] & 0xFE) == 0xFA:
         return "mp3"  # bare MPEG-1 Layer III frame sync (no ID3 tag);

@@ -2349,7 +2349,8 @@ def _parse_inline_image(lex: "_Lexer") -> tuple[dict, bytes]:
     an EXACT length (width x height x bits, row-padded) so an embedded
     'EI' byte pair cannot truncate them; filtered payloads scan for a
     whitespace-delimited EI (the standard heuristic — real encoders'
-    CCITT/DCT streams do not contain one by construction).  Leaves the
+    CCITT/DCT streams do not contain one by construction), falling back
+    to a bare ``<data>EI`` when none is found.  Leaves the
     lexer positioned after EI; raises ValueError on malformed input."""
     meta: dict = {}
     while True:
@@ -2382,21 +2383,28 @@ def _parse_inline_image(lex: "_Lexer") -> tuple[dict, bytes]:
         lex.pos = pos + nbytes
         lex.expect("EI")
         return meta, d[pos : pos + nbytes]
+    # first choice: whitespace-delimited EI; the spec does not require
+    # the whitespace before EI, so a writer's `<data>EI` falls back to
+    # the first EI that ends at whitespace, a delimiter or end of data
     i = pos
     n = len(d)
+    bare = None
     while True:
         j = d.find(b"EI", i)
         if j < 0:
-            raise ValueError("pdf parse: unterminated inline image data")
+            break
         after = d[j + 2] if j + 2 < n else None
-        if (
-            j > pos
-            and d[j - 1] in _WS
-            and (after is None or after in _WS or after in _DELIM)
-        ):
-            lex.pos = j + 2
-            return meta, d[pos : j - 1]
+        if after is None or after in _WS or after in _DELIM:
+            if j > pos and d[j - 1] in _WS:
+                lex.pos = j + 2
+                return meta, d[pos : j - 1]
+            if bare is None:
+                bare = j
         i = j + 2
+    if bare is None:
+        raise ValueError("pdf parse: unterminated inline image data")
+    lex.pos = bare + 2
+    return meta, d[pos:bare]
 
 
 def _inline_image_listing(content: bytes) -> list[dict]:

@@ -15,6 +15,10 @@ Scale notes (100 TB / 10^12 docs):
     any G; on Iceberg the group predicate additionally prunes files via
     the bucket spec.  ``groups_per_pass`` trades extra scans for more
     frequent commit barriers on very long jobs.
+  * the pass's one shuffle is repartition(P, xxhash64(url)): a row-level
+    key, so the P Python tasks get near-equal input whatever the host or
+    size skew.  Each task then writes one file per group it holds, up to
+    P x G files per pass; groups_per_pass and compact_group bound that.
   * checksums use bit_xor(xxhash64(...)) — order-independent, overflow-free
     (Spark 4 runs ANSI mode; sum() of hashes would overflow).
   * per-input-file lineage comes from input_file_name() BEFORE the shuffle,
@@ -83,6 +87,30 @@ def result_checksum(result: DataFrame):
     return int(row["n"]), int(row["checksum"] or 0)
 
 
+def _lineage(pages: DataFrame, file_expr, *keys) -> list:
+    """Per-(keys, input file) row counts and xors of url hashes, collected
+    to the driver as ``(key values, lineage record)`` pairs."""
+    rows = (
+        pages.groupBy(*keys, file_expr.alias("input_file"))
+        .agg(
+            F.count("*").alias("n_rows"),
+            F.bit_xor(F.xxhash64("url")).alias("chk"),
+        )
+        .collect()
+    )
+    return [
+        (
+            tuple(r[: len(keys)]),
+            {
+                "input_file": r["input_file"],
+                "n_rows": int(r["n_rows"]),
+                "input_checksum": int(r["chk"] or 0),
+            },
+        )
+        for r in rows
+    ]
+
+
 def _commit_staged_groups(
     spark,
     staging: str,
@@ -141,7 +169,6 @@ def run_extraction(
     out_path: str,
     *,
     num_partitions: int | None = None,
-    salt_buckets: int = 8,
     groups: int = 4,
     resume: bool = False,
     fail_after_group: int | None = None,
@@ -153,7 +180,8 @@ def run_extraction(
 
     All uncommitted groups are processed in ONE pass by default: the input
     is scanned once (plus one column-pruned lineage aggregate over `url`),
-    extracted, and written ``partitionBy(group)`` into a staging directory;
+    hash-repartitioned on the url, extracted, and written
+    ``partitionBy(group)`` into a staging directory;
     groups are then COMMITTED in order by an atomic per-group rename +
     manifest write, preserving the per-group resume granularity without
     the per-group input re-scan the previous formulation paid on plain
@@ -168,11 +196,22 @@ def run_extraction(
     node's width (two conditional aggregates per group in the pass), so
     prefer it at G in the thousands.
 
+    The pass's one shuffle is keyed on the url alone, so rows (and the
+    size-skewed documents among them) spread evenly over
+    ``num_partitions`` Python tasks.  The price is file count: every task
+    holds rows of every group in the pass and writes one file per group,
+    so a pass writes up to ``num_partitions x len(batch)`` files.
+    ``groups_per_pass`` bounds that product, and ``compact_group``
+    rewrites a committed group into target-sized files.
+
     ``lineage_detail_limit`` caps the per-(group, file) lineage rows
     collected to the driver per pass; above it (parquet fallback where
     every file feeds every group), lineage coarsens to one per-file
     record set written once per pass and referenced from each group
-    manifest via ``lineage_ref``.
+    manifest via ``lineage_ref``.  When the input's file listing shows
+    the detail fits, the pass runs the detailed aggregate alone;
+    otherwise a per-file aggregate counts the files first, as the coarse
+    lineage needs it anyway.
 
     ``fail_after_group`` is a test hook: raise after committing that many
     groups, simulating a killed job for the resume test.
@@ -208,6 +247,9 @@ def run_extraction(
     summary = {"groups": groups, "skipped": sorted(done), "committed": []}
     committed_count = 0
     group_col = F.pmod(F.xxhash64("url"), F.lit(groups))
+    # driver-side file listing (no job); empty off the archive sources'
+    # non-file plans and catalog tables that do not expose their files
+    n_listed_files = len(pages.inputFiles())
     if not groups_per_pass:
         groups_per_pass = max(1, len(todo))
 
@@ -238,75 +280,36 @@ def run_extraction(
             if input_format in ("warc", "zip", "tar")
             else F.input_file_name()
         )
-        # per-file totals first: its row count IS the file count (no
-        # separate distinct-count pass), and it alone suffices for the
-        # coarse mode
-        per_file = [
-            {
-                "input_file": r["input_file"],
-                "n_rows": int(r["n_rows"]),
-                "input_checksum": int(r["chk"] or 0),
-            }
-            for r in batch_pages.groupBy(file_expr.alias("input_file"))
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.bit_xor(F.xxhash64("url")).alias("chk"),
-            )
-            .collect()
-        ]
-        n_files = len(per_file)
-        if n_files * len(batch) <= lineage_detail_limit:
-            for r in (
-                batch_pages.groupBy(
-                    group_col.alias("grp"), file_expr.alias("input_file")
-                )
-                .agg(
-                    F.count("*").alias("n_rows"),
-                    F.bit_xor(F.xxhash64("url")).alias("chk"),
-                )
-                .collect()
+        # the detailed aggregate alone when the file listing shows it
+        # fits; otherwise per-file totals first: their row count IS the
+        # count of files feeding this pass, and they alone suffice for
+        # the coarse mode
+        per_file = None
+        if not n_listed_files or (
+            n_listed_files * len(batch) > lineage_detail_limit
+        ):
+            per_file = [rec for _, rec in _lineage(batch_pages, file_expr)]
+        if per_file is None or len(per_file) * len(batch) <= lineage_detail_limit:
+            for (grp,), rec in _lineage(
+                batch_pages, file_expr, group_col.alias("grp")
             ):
-                lineage[int(r["grp"])].append(
-                    {
-                        "input_file": r["input_file"],
-                        "n_rows": int(r["n_rows"]),
-                        "input_checksum": int(r["chk"] or 0),
-                    }
-                )
+                lineage[int(grp)].append(rec)
         else:
             lineage_ref = f"lineage-pass-{i}.json"
             _write_manifest_atomic(
                 os.path.join(out_path, MANIFEST_DIR, lineage_ref),
                 {
                     "groups": [int(g) for g in batch],
-                    "n_files": n_files,
+                    "n_files": len(per_file),
                     "lineage": sorted(per_file, key=lambda r: r["input_file"]),
                 },
             )
 
-        # ONE shuffle keyed on (group, salted url-hash): colocates each
-        # group's rows so the partitionBy write emits ~salt-many files per
-        # group instead of |batch| files from every task, while the salt
-        # keeps ~4x num_partitions key-buckets for balance and spreads
-        # size-skewed documents like salted_repartition does.  The salt
-        # never drops below salt_buckets: with many groups per pass the
-        # balance term goes to 1, which would pin every group's giants to
-        # one partition — the exact straggler the salt exists to prevent
-        salt = max(
-            salt_buckets if salt_buckets > 1 else 1,
-            (num_partitions * 4) // max(1, len(batch)),
-        )
-        key = F.xxhash64("url")
-        if salt_buckets > 1:
-            size_col = F.coalesce(
-                F.length("text").cast("long"),
-                F.length("html").cast("long"),
-                F.lit(0),
-            )
-            key = F.xxhash64("url", (size_col % salt_buckets).cast("string"))
-        spread = batch_pages.repartition(
-            num_partitions, group_col, F.pmod(key, F.lit(salt))
-        )
+        # ONE shuffle, keyed on the url alone: every row is its own key,
+        # so partitions get near-equal row counts and bytes whatever the
+        # host or size skew.  The UDF stage is one wave of num_partitions
+        # Python tasks, paced by its heaviest partition
+        spread = batch_pages.repartition(num_partitions, F.xxhash64("url"))
         result = extract_documents(spread).withColumn("group", group_col)
 
         # checksums on the WRITE path via observed metrics — at 100 TB,
@@ -346,7 +349,6 @@ def run_extraction(
                 "pass_wall_sec": pass_wall,
                 "pass_group_count": len(batch),
                 "num_partitions": num_partitions,
-                "salt_buckets": salt_buckets,
             }
             if lineage_ref is not None:
                 manifest["lineage_ref"] = lineage_ref  # coarse per-file totals

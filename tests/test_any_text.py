@@ -55,7 +55,12 @@ def test_sniff_types():
         (b"PK\x03\x04 corrupt zip that is not a zip", "zip"),
         (b"RIFF\x24\x00\x00\x00WAVEfmt ", "wav"),
         (b"RIFF\x24\x00\x00\x00AVI LIST", "riff"),
-        (b"\x00\x00\x00\x18ftypisom rest", "mp4"),
+        (b"\x00\x00\x00\x18ftypisom\x00\x00\x02\x00isomiso2 rest", "mp4"),
+        # a box size past the blob's end is no ftyp box
+        (b"\x00\x00\x00\x18ftypisom rest", "binary"),
+        (b"\x00\x00\x00\x10ftyp\x00\x01\x02\x03\x00\x00\x00\x00", "binary"),
+        # text that spells 'ftyp' at bytes 4-8 keeps its text
+        (b"the ftyp box leads an mp4 file", "text"),
         (b"ID3\x04\x00\x00\x00\x00\x00\x00", "mp3"),
         (b"\xff\xfb\x90\x00 frame", "mp3"),
         (b"\xff\xfe\x00\x01 utf16-bom-ish", "text"),  # even length, decodes
@@ -79,6 +84,8 @@ def test_extract_any_per_type():
     assert (t, text) == ("odt", "open  doc\nsecond\tpara")
     t, text = extract_any("déjà vu".encode())
     assert t == "text" and text == "déjà vu"
+    t, text = extract_any(b"the ftyp box leads an mp4 file")
+    assert (t, text) == ("text", "the ftyp box leads an mp4 file")
     from pdf_extraction_spark.operators.rtf_text import build_rtf
 
     t, text = extract_any(build_rtf(["rich €", "text"]))

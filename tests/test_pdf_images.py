@@ -169,3 +169,25 @@ def test_inline_unfiltered_exact_length():
     meta, data = _parse_inline_image(lex)
     assert data == pixels[:-1] or data == pixels  # exact 9 bytes
     assert len(data) == 9
+
+
+def test_inline_image_data_ending_in_bare_ei():
+    """PDF 32000-1 does not require whitespace between the inline data
+    and EI: a writer's ``<data>EI`` parses, via the fallback to the first
+    EI that ends at whitespace, a delimiter or end of data."""
+    from pdf_extraction_spark.pdf_parse import _Lexer, _parse_inline_image
+
+    jpg = encode_baseline_jpeg(np.full((16, 24), 200, np.uint8))
+    pdf = build_pdf(["x"], images=[("inline-dct", 24, 16, jpg)], compress=False)
+    assert pdf.count(b"\nEI Q\n") == 1
+    # same-length edit: /Length and the xref offsets stay valid
+    bare = pdf.replace(b"\nEI Q\n", b"EI Q\n\n")
+    (im,) = extract_pdf_images(bare)[0]
+    assert im["filter"] == "DCTDecode" and im["data"] == jpg
+    assert extract_pdf_pages(bare) == ["x"]
+    # EI at the very end of the data also terminates it
+    lex = _Lexer(b"BI /W 1 /H 1 /F /DCT ID \xff\xd8\xff\xd9EI")
+    assert lex.keyword() == "BI"
+    assert _parse_inline_image(lex) == (
+        {"Width": 1, "Height": 1, "Filter": "DCT"}, b"\xff\xd8\xff\xd9"
+    )

@@ -157,3 +157,114 @@ def test_undersplit_guard_noops_on_wide_input(spark):
     plan = _formatted_plan(decode_bmp(blobs, "media_id", "blob"))
     assert "Exchange" not in plan, plan
     assert "MapInPandas" in plan, plan
+
+
+def _jobs_launched(spark, fn):
+    """``(fn(), number of Spark jobs started while it ran)``.  The
+    listener bus is drained before each read, so a job's start event
+    cannot land after the count."""
+    sc = spark.sparkContext
+
+    def last_job():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+
+    before = last_job()
+    out = fn()
+    return out, last_job() - before
+
+
+def test_undersplit_probe_launches_no_job(spark):
+    """Over an explicit-count repartition the guard reads the width off
+    the physical plan: ``df.rdd`` would make AQE execute the shuffle
+    below it (a full extra scan + shuffle job)."""
+    from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
+
+    target = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 1000).repartition(target, "id")
+    out, jobs = _jobs_launched(spark, lambda: rebalance_if_undersplit(wide))
+    assert out is wide and jobs == 0
+    narrow = spark.range(0, 1000).repartition(1, "id")
+    out, jobs = _jobs_launched(spark, lambda: rebalance_if_undersplit(narrow))
+    assert out is not narrow and jobs == 0
+    assert out.rdd.getNumPartitions() == target
+
+    # a 1-partition scan still gets the round-robin exchange
+    single = spark.range(0, 1000, 1, 1)
+    out = rebalance_if_undersplit(single)
+    assert out is not single and out.rdd.getNumPartitions() == target
+    assert "RoundRobinPartitioning" in _formatted_plan(out)
+
+    # an aggregate keeps the df.rdd probe, which sees AQE's coalescing
+    agg = spark.range(0, 1000).groupBy((F.col("id") % 7).alias("k")).count()
+    coalesced = agg.rdd.getNumPartitions()
+    assert coalesced < target
+    out = rebalance_if_undersplit(agg)
+    assert out is not agg and out.rdd.getNumPartitions() == target
+
+
+def test_extraction_pass_shape(spark, pages_unit, tmp_path):
+    """One default ``run_extraction`` pass launches five Spark jobs: the
+    parquet footer read behind ``read_pages``, the lineage aggregate (map
+    stage + result) and the write (shuffle map stage + write).  A
+    re-added partition probe or a second lineage aggregate fails the
+    count.  Its one shuffle is keyed per row, so the Python tasks get
+    even inputs, and the manifests match a run of the former
+    (group, salted url-hash) key: the checksums are order-independent."""
+    import collections
+    import glob
+    import json
+    import math
+    import os
+    import re
+
+    import pyarrow.parquet as pq
+
+    from pdf_extraction_spark.operators.extract import extract_documents
+    from pdf_extraction_spark.plans.pipeline import (
+        MANIFEST_DIR,
+        _checksum_exprs,
+        run_extraction,
+    )
+
+    out = str(tmp_path / "out")
+    _, jobs = _jobs_launched(
+        spark, lambda: run_extraction(spark, pages_unit, out, groups=4)
+    )
+    assert jobs == 5
+
+    # rows per Python task, read off the part-<task> file names: each
+    # task writes one file per group it holds, one row per input row
+    rows = collections.Counter()
+    for f in glob.glob(os.path.join(out, "group=*", "*.parquet")):
+        task = int(re.search(r"part-(\d+)", os.path.basename(f)).group(1))
+        rows[task] += pq.read_metadata(f).num_rows
+    n_parts = spark.sparkContext.defaultParallelism
+    mean = sum(rows.values()) / n_parts
+    # a uniform hash over 25 rows a partition puts ~1.3x the mean on the
+    # fullest one; three standard deviations bound it, and the former
+    # 32-key shuffle (2.1x here) exceeds that
+    assert max(rows.values()) <= mean + 3 * math.sqrt(mean * (1 - 1 / n_parts))
+
+    pages = spark.read.parquet(pages_unit)
+    group = F.pmod(F.xxhash64("url"), F.lit(4))
+    size = F.coalesce(
+        F.length("text").cast("long"), F.length("html").cast("long"), F.lit(0)
+    )
+    salted = F.pmod(
+        F.xxhash64("url", (size % 8).cast("string")), F.lit(max(8, n_parts))
+    )
+    former = extract_documents(pages.repartition(n_parts, group, salted))
+    want = {
+        r["group"]: (r["n"], r["checksum"] or 0)
+        for r in former.withColumn("group", group)
+        .groupBy("group")
+        .agg(*_checksum_exprs())
+        .collect()
+    }
+    mdir = os.path.join(out, MANIFEST_DIR)
+    got = {}
+    for name in os.listdir(mdir):
+        m = json.load(open(os.path.join(mdir, name)))
+        got[m["group"]] = (m["n_rows"], m["output_checksum"])
+    assert got == want
